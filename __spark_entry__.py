@@ -1386,13 +1386,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["jsonl_export"] = q_jsonl_export
 
     def q_conv_stats(spark, sf):
-        """A3 + salted two-level aggregation over the extracted table.
+        """A3 per-conversation rollup over the extracted table (one conv_id
+        exchange; the map-side partial aggregate absorbs key skew).
         Pinned to the oracle tier like every transcript-oracled query:
         the oracle SQL is static, so query and oracle must agree on the
         dataset at every sf."""
-        from pdf_extractors_spark.operators import salting
-
-        return salting.salted_conv_stats(_extracted_pinned(spark), heavy_keys=[])
+        return pipeline.conv_stats(_extracted_pinned(spark))
 
     q["conv_stats_salted"] = q_conv_stats
 
@@ -1414,19 +1413,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["html_spans_flat"] = q_html_spans_flat
 
-    def q_conv_stitch(spark, sf):
-        """Cross-turn assembly via grouped-map applyInPandas: one row per
-        conversation with turns stitched in order (the conversation-level
-        UDF slot from SURVEY §3.2 stage B)."""
-        return pipeline.conv_stitch(_transcripts(spark, "sf0.01"))
-
-    q["conv_stitch"] = q_conv_stitch
-
     def q_conv_stitch_arrow(spark, sf):
-        """Cross-turn assembly via grouped-map applyInArrow (the
-        Arrow-native stage the north star names): identical contract to
-        conv_stitch — same oracle SQL, pyarrow compute kernels in the
-        worker, no pandas materialization."""
+        """Cross-turn assembly via grouped-map applyInArrow: one row per
+        conversation with turns stitched in order, null text as '' (the
+        conversation-level UDF slot from SURVEY §3.2 stage B)."""
         return pipeline.conv_stitch_arrow(_transcripts(spark, "sf0.01"))
 
     q["conv_stitch_arrow"] = q_conv_stitch_arrow
@@ -8763,15 +8753,13 @@ def oracle_sql() -> dict[str, str]:
                    role, text, n_merged
             from g
         """
-        oracles["conv_stitch"] = f"""
+        oracles["conv_stitch_arrow"] = f"""
             select conv_id, count(*) as n_turns,
                    string_agg(coalesce(text, ''), chr(10) || chr(10)
                               order by turn_idx) as stitched_text
             from read_parquet('{tp}')
             group by conv_id
         """
-        # the Arrow-native stitch is contract-identical: same oracle
-        oracles["conv_stitch_arrow"] = oracles["conv_stitch"]
         oracles.update(
             {
                 "fixedwidth_items_flat": _fixedwidth_sql(tp),

@@ -8,8 +8,8 @@ of multi-turn transcripts ``(conv_id, turn_idx, role, text, tool, ts)``:
 
 * ``extractors/`` — the oracle library: pure pandas/Python, compiled-regex
   extraction per payload family, shared between the Spark stage and pytest.
-* ``pipeline``   — the Arrow-batched ``mapInPandas`` stage (zero per-row
-  Python at the Spark level) plus salted-skew repartitioning.
+* ``pipeline``   — the Arrow-batched ``mapInArrow`` extraction stage (zero
+  per-row Python at the Spark level) plus the conv_id-keyed stages.
 * ``checkpoint`` — per-partition lineage manifests for resumable batch runs.
 * ``operators/`` — large-scale training-data ops: dedup (exact / MinHash-LSH
   / SimHash / n-gram Jaccard), ANN similarity, text quality stats,

@@ -14,7 +14,7 @@ where ``ExtractResult`` is a plain dict::
       "parse_errors": int,
     }
 
-The same functions run (a) inside the Spark ``mapInPandas`` stage, batched
+The same functions run (a) inside the Spark ``mapInArrow`` stage, batched
 over documents, and (b) standalone under pytest as the correctness oracle
 (SURVEY.md §5.2: oracle reimplemented once, shared). All regexes are
 compiled at import time (the reference recompiles per call — a known

@@ -24,7 +24,7 @@ boundary continues on the next page. Here the turn is the unit of
 parallelism, so state resets per payload and a leading orphan fragment
 (no ``HOUSEHOLD NO.:`` yet) is dropped by the household_number guard.
 Multi-page households belong to conversation-level stitching
-(``pipeline.conv_stitch`` / ``groupBy(conv).applyInPandas``) before
+(``pipeline.conv_stitch_arrow``, a ``groupBy(conv_id).applyInArrow``) before
 extraction — the same trade nordic.py and mobil.py document.
 """
 

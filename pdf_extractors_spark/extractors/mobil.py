@@ -21,7 +21,7 @@ manufacturer/year/model/engine context across PAGES (state initialized
 once, mobil-oil-extractor.py:36-41); here the turn is the unit of
 parallelism, so context resets per payload. A page whose leading entries
 continue the previous page's context belongs to conversation-level
-stitching (pipeline.conv_stitch / groupBy(conv).applyInPandas) before
+stitching (pipeline.conv_stitch_arrow, a groupBy(conv_id).applyInArrow) before
 extraction — the same trade nordic.py documents for its header fields.
 """
 

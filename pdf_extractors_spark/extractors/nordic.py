@@ -19,8 +19,8 @@ page where they last matched onto every later page's records). Here both
 reset per payload, because turns are the unit of parallelism: cross-turn
 delivery-date fill is provided as a window operator
 (``pipeline.conv_forward_fill``), and multi-page invoices belong to
-conversation-level stitching (``pipeline.conv_stitch`` /
-``groupBy(conv).applyInPandas``) before extraction.
+conversation-level stitching (``pipeline.conv_stitch_arrow``, a
+``groupBy(conv_id).applyInArrow``) before extraction.
 """
 
 from __future__ import annotations

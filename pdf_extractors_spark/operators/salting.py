@@ -1,20 +1,24 @@
-"""Salted skew handling for conversation-level aggregation.
+"""Salted skew handling for key-skewed joins, and skew diagnostics.
 
 A 10^12-turn transcripts table has power-law conversation lengths
-(FIXTURES.md §1): a plain ``groupBy(conv_id)`` puts a 5000-turn
-conversation's rows in one reducer while most reducers get a handful.
-AQE's skew handling only splits *join* partitions, not aggregations, so
-salting is custom (SURVEY.md §4).
+(FIXTURES.md §1), so a few keys hold most rows. Whether that hurts
+depends on the operator:
 
-Pattern: two-level aggregation.
+* **Algebraic aggregates** (count, sum, min, max) need no salting. Spark
+  plans ``groupBy(conv_id).agg(...)`` as a partial ``HashAggregate``
+  below the exchange: each map task combines a hot conversation's rows
+  into one partial row before the shuffle, so the reducer that owns a
+  5000-turn conversation receives at most one row per map task.
+  ``pipeline.conv_stats`` is that plan (its single exchange and the
+  partial aggregate below it are pinned by tests/test_salting.py).
+* **Joins** do ship every fact row of a hot key to one reducer. AQE
+  splits skewed partitions of shuffle joins; ``skew_join`` is the
+  explicit form for when the heavy keys are known: ``with_salt`` spreads
+  the heavy fact keys over S salts and the dimension side replicates
+  only those keys' rows.
 
-1. detect heavy hitters by sampling (cheap approximate counts),
-2. salt only the heavy keys — ``salt = pmod(hash(conv_id, turn_idx), S)``
-   for heavy conv_ids, 0 otherwise,
-3. partial aggregate on (conv_id, salt)  — spreads each heavy key over S
-   reducers,
-4. final aggregate on conv_id            — combines ≤ S partial rows per
-   heavy key, a trivially small shuffle.
+``heavy_hitters`` finds the heavy keys by sampling; ``skew_report`` is
+the exact top-k diagnostic to run before choosing salt factors.
 
 The per-turn extraction stage itself never needs salting: it is stateless
 per turn, so round-robin input splits already balance it (pipeline.py).
@@ -23,6 +27,8 @@ per turn, so round-robin input splits already balance it (pipeline.py).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from .. import pipeline
 
 
 def heavy_hitters(
@@ -80,24 +86,16 @@ def salted_conv_stats(
     heavy_keys: list[str] | None = None,
     n_salts: int = 16,
 ) -> DataFrame:
-    """Per-conversation stats with salted two-level aggregation — same
-    result as pipeline.conv_stats, skew-immune plan. All aggregates used
-    are algebraic (count/sum), so partials combine exactly."""
-    if heavy_keys is None:
-        heavy_keys = heavy_hitters(extracted)
-    salted = with_salt(extracted, heavy_keys, n_salts=n_salts)
-    partial = salted.groupBy("conv_id", "_salt").agg(
-        F.count("*").alias("turns"),
-        F.sum(F.length("extracted_text")).alias("extracted_chars"),
-        F.sum("parse_errors").alias("parse_errors"),
-        F.sum(F.size("spans")).alias("n_spans"),
-    )
-    return partial.groupBy("conv_id").agg(
-        F.sum("turns").alias("turns"),
-        F.sum("extracted_chars").alias("extracted_chars"),
-        F.sum("parse_errors").alias("parse_errors"),
-        F.sum("n_spans").alias("n_spans"),
-    )
+    """Per-conversation stats: exactly ``pipeline.conv_stats``.
+
+    ``heavy_keys`` and ``n_salts`` are accepted for callers written
+    against the earlier salted two-level plan, and no longer affect the
+    plan. Every aggregate here is algebraic (count/sum), so the map-side
+    partial aggregate already reduces each hot conversation to one row
+    per map task before the single conv_id exchange; salting added a
+    second exchange and an eager heavy-hitter sampling job on top of
+    that and bought nothing."""
+    return pipeline.conv_stats(extracted)
 
 
 def skew_report(

@@ -3,26 +3,23 @@
 Shape (SURVEY.md §3 "general pattern", re-expressed Spark-first)::
 
     scan (parquet/Iceberg, pruned) →
-    [optional salted repartition]  →
-    mapInPandas(extract_batch)     →  one narrow Arrow-batched stage
+    mapInArrow(_extract_batches_arrow) →  one narrow Arrow-batched stage
     sortWithinPartitions(conv_id, turn_idx) → write
 
 Zero per-row Python at the Spark level: the Python worker receives Arrow
-batches of whole documents; the per-document state machines (M1-M10) run
-inside the batch, vectorized across documents. There is no wide dependency
-anywhere in the extraction itself — per-turn payloads are self-contained —
-so throughput scales linearly with cores/executors (the north rule's
+record batches of whole documents and runs the per-document state
+machines (M1-M10) over each batch. There is no wide dependency anywhere
+in the extraction itself — per-turn payloads are self-contained — so
+throughput scales linearly with cores/executors (the north rule's
 N→4N ≥ 0.8 efficiency criterion).
 
-Cross-turn operators (conv-level forward-fill M8, conv-level stats) are
-provided as separate window/aggregate stages below, grouped by conv_id.
+Cross-turn operators (conv-level forward-fill M8, conv-level stats, the
+``conv_stitch_arrow`` assembly) are separate window/aggregate stages
+below, grouped by conv_id.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -59,42 +56,10 @@ EXTRACTED_SCHEMA = StructType(
 )
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """The Arrow-batched extraction kernel. Runs once per Arrow batch
-    (≤ spark.sql.execution.arrow.maxRecordsPerBatch rows); per-document
-    loops only, no per-row Spark-side Python. Output assembled columnar
-    (lists per column), not as per-row dicts — measurably cheaper at
-    batch sizes in the thousands."""
-    from .extractors.dispatch import dumps_records as _dumps
-
-    for pdf in batches:
-        texts: list[str] = []
-        spans: list[list] = []
-        records: list[str] = []
-        errors: list[int] = []
-        for kind, payload in zip(pdf["tool"], pdf["text"]):
-            out = dispatch.extract_one(kind, payload)
-            texts.append(out["extracted_text"])
-            spans.append(out["spans"])
-            records.append(_dumps(out["records"]))
-            errors.append(out["parse_errors"])
-        yield pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].values,
-                "turn_idx": pdf["turn_idx"].values,
-                "kind": pdf["tool"].values,
-                "extracted_text": texts,
-                "spans": spans,
-                "records": records,
-                "parse_errors": errors,
-            }
-        )
-
-
 def _extract_batches_arrow(batches):
-    """Arrow-native variant of the extraction kernel (``mapInArrow``):
-    consumes/produces ``pyarrow.RecordBatch`` directly, skipping the
-    pandas materialization on both sides of the Python worker. The
+    """The extraction kernel (``mapInArrow``): runs once per Arrow record
+    batch (≤ spark.sql.execution.arrow.maxRecordsPerBatch rows) with no
+    pandas materialization on either side of the Python worker. The
     pass-through columns (conv_id, turn_idx, tool) are reused zero-copy;
     only the four computed columns are built, in C, via ``pa.array``."""
     import pyarrow as pa
@@ -144,34 +109,29 @@ def _extract_batches_arrow(batches):
 def extract_transcripts(
     transcripts: DataFrame,
     repartition_to: int | None = None,
-    engine: str = "arrow",
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → extracted.
+
+    One narrow ``mapInArrow`` stage running ``_extract_batches_arrow``;
+    its rows equal the sequential ``dispatch.to_row`` oracle (pinned by
+    tests/test_pipeline.py).
 
     ``repartition_to``: explicit parallelism for the extraction stage.
     Default: no shuffle at all — parquet/Iceberg split planning already
     yields balanced input splits, and since extraction is per-turn there
     is no key skew to correct (a long conversation is just more rows,
-    spread across splits). Salting (operators/salting.py) is only needed
-    for the conv-level stages below.
-
-    ``engine``: ``"arrow"`` (default — ``mapInArrow``, skips the pandas
-    round-trip in the Python worker) or ``"pandas"`` (``mapInPandas``).
-    Both run the identical extraction kernel and produce identical rows
-    (pinned by tests/test_pipeline.py).
+    spread across splits).
     """
     # Manual column pruning: Catalyst cannot prune INTO an opaque
-    # mapInArrow/mapInPandas stage, so without this projection every
-    # input column (role, ts, ...) is Arrow-serialized into the Python
-    # worker and straight back out unused. Only the four columns the
-    # kernel reads cross the IPC boundary.
+    # mapInArrow stage, so without this projection every input column
+    # (role, ts, ...) is Arrow-serialized into the Python worker and
+    # straight back out unused. Only the four columns the kernel reads
+    # cross the IPC boundary.
     df = transcripts.select("conv_id", "turn_idx", "tool", "text")
     if repartition_to:
         # round-robin, not hash: the stage is stateless per turn, so we
         # only want even card counts, never key co-location.
         df = df.repartition(repartition_to)
-    if engine == "pandas":
-        return df.mapInPandas(_extract_batches, schema=EXTRACTED_SCHEMA)
     return df.mapInArrow(_extract_batches_arrow, schema=EXTRACTED_SCHEMA)
 
 
@@ -926,31 +886,6 @@ def pii_echo(
     )
 
 
-def conv_stitch(transcripts: DataFrame, sep: str = "\n\n") -> DataFrame:
-    """Cross-turn assembly via grouped-map ``applyInPandas`` (the
-    conversation-level UDF shape from SURVEY §3.2 stage B): all turns of
-    a conversation co-located in one pandas group, stitched in turn
-    order. Equivalent to ``collect_list`` + ``array_join`` — expressed as
-    the grouped UDF deliberately, since this is the slot where per-
-    conversation Python (entity resolution across turns, conversation
-    summarization) plugs in. One shuffle on conv_id."""
-    import pandas as pd
-
-    def stitch(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx")
-        return pd.DataFrame(
-            {
-                "conv_id": [pdf["conv_id"].iloc[0]],
-                "n_turns": [len(pdf)],
-                "stitched_text": [sep.join(pdf["text"].fillna(""))],
-            }
-        )
-
-    return transcripts.select("conv_id", "turn_idx", "text").groupBy(
-        "conv_id"
-    ).applyInPandas(stitch, schema="conv_id string, n_turns long, stitched_text string")
-
-
 def conv_pairs(
     transcripts: DataFrame,
     context_turns: int = 4,
@@ -1538,15 +1473,13 @@ def session_rollup(
 
 
 def conv_stitch_arrow(transcripts: DataFrame, sep: str = "\n\n") -> DataFrame:
-    """Cross-turn assembly via grouped-map ``applyInArrow`` — the
-    Arrow-NATIVE sibling of :func:`conv_stitch`: the group arrives as a
-    ``pyarrow.Table`` and is assembled with pyarrow compute kernels, no
-    pandas materialization in the worker at all (``applyInPandas`` still
-    builds a pandas DataFrame per group from the Arrow batch; for
-    string-heavy conversation groups that copy is the dominant worker
-    cost). Identical output contract to conv_stitch — pinned by test —
-    and the same single conv_id exchange; this is the shape the north
-    star names for per-conversation stages at 10^12 turns."""
+    """Cross-turn assembly via grouped-map ``applyInArrow``: one row per
+    conversation, ``(conv_id, n_turns, stitched_text)``, with the turns'
+    text joined by ``sep`` in turn order and null text as ''. The group
+    arrives as a ``pyarrow.Table`` and is assembled with pyarrow compute
+    kernels, with no pandas materialization in the worker. One conv_id
+    exchange. This is the slot where per-conversation Python (entity
+    resolution across turns, summarization) plugs in."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

@@ -3,7 +3,7 @@
 The reference is batch-only and the north rule is resumable batch, so
 streaming is not a required operator (SURVEY.md §2.8) — but the extraction
 stage is stateless per turn, which makes it trivially streamable: the same
-``mapInPandas`` kernel runs unchanged on a streaming DataFrame. This module
+``mapInArrow`` kernel runs unchanged on a streaming DataFrame. This module
 wires that up for incremental ingestion (new transcript files appearing in
 a directory → extracted parquet, exactly-once via checkpointLocation).
 

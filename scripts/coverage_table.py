@@ -16,17 +16,27 @@ import __spark_entry__ as entrymod  # noqa: E402
 
 
 def driver_gated_ever(repo: str, live: set[str]) -> tuple[set[str], set[str]]:
-    """Names with a driver row in any round's CORRECTNESS file, split
-    into (still registered, banked-but-demoted). Round-4 verdict item 5:
-    the headline count must be against the LIVE registry — a demoted
-    query's banked row is evidence for code that may no longer be on
-    the driver surface, so it is reported separately, never summed in.
+    """Names with a GREEN row in any round's CORRECTNESS file, split
+    into (still registered, banked-but-demoted). A row is green when
+    rows, schema and value hash all match and it carries no error; a
+    rows-only or mismatched row is no evidence of value-checked
+    coverage. The headline count is against the LIVE registry — a
+    demoted query's banked row is evidence for code that may no longer
+    be registered, so it is reported separately, never summed in.
     """
     ever: set[str] = set()
     for fn in sorted(os.listdir(repo)):
         if fn.startswith("CORRECTNESS_r") and fn.endswith(".json"):
-            ever |= set(json.load(open(os.path.join(repo, fn))))
+            rows = json.load(open(os.path.join(repo, fn)))
+            ever |= {name for name, row in rows.items() if _green(row)}
     return ever & live, ever - live
+
+
+def _green(row: dict) -> bool:
+    return (
+        all(row.get(k) is True for k in ("rows_match", "schema_match", "hash_match"))
+        and row.get("err") is None
+    )
 
 
 # descriptions for the lambda-defined queries (no docstring to pull)

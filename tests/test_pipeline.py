@@ -53,8 +53,8 @@ def test_spark_matches_oracle(spark, small_transcripts):
 
 def test_giant_payload_survives_arrow_batching(spark):
     """A multi-MB single turn must flow through the Arrow-batched stage
-    (both kernels) without OOM or truncation — the maxRecordsPerBatch
-    bound means payload size degrades to more batches, never failure."""
+    without OOM or truncation — the maxRecordsPerBatch bound means
+    payload size degrades to more batches, never failure."""
     big_html = (
         "<html><body><main><article>"
         + ("<p>" + ("Large block of body text. " * 200) + "</p>") * 400
@@ -67,13 +67,13 @@ def test_giant_payload_survives_arrow_batching(spark):
         rows,
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    for engine in ("arrow", "pandas"):
-        out = pipeline.extract_transcripts(probe, engine=engine).collect()
-        assert len(out) == 1
-        r = out[0]
-        assert r["parse_errors"] == 0
-        assert "Total amount without VAT" in r["extracted_text"]
-        assert all(s["label"] for s in r["spans"])
+    out = pipeline.extract_transcripts(probe).collect()
+    assert len(out) == 1
+    r = out[0]
+    assert r["parse_errors"] == 0
+    assert "Total amount without VAT" in r["extracted_text"]
+    assert all(s["label"] for s in r["spans"])
+    assert r.asDict(recursive=True) == dispatch.to_row("big", 0, "html_page", big_html)
 
 
 def test_quarantine_split(spark):
@@ -96,13 +96,20 @@ def test_quarantine_split(spark):
     assert ext.count() == len(g) + len(q)
 
 
-def test_arrow_and_pandas_kernels_identical(spark, small_transcripts):
-    """The mapInArrow and mapInPandas extraction kernels must produce
-    byte-identical rows — same dispatch, same schema, different Python
-    worker serialization only."""
-    arrow = _collect(pipeline.extract_transcripts(small_transcripts, engine="arrow"))
-    pandas = _collect(pipeline.extract_transcripts(small_transcripts, engine="pandas"))
-    assert arrow == pandas
+def test_kernel_rows_equal_to_row_oracle(spark, small_transcripts):
+    """Every row of the mapInArrow kernel, keyed by (conv_id, turn_idx),
+    equals ``dispatch.to_row`` on the same turn, field by field — the
+    Arrow schema round-trip (int32 offsets, list<struct> spans, records
+    JSON string) loses nothing."""
+    got = {
+        (r["conv_id"], r["turn_idx"]): r.asDict(recursive=True)
+        for r in pipeline.extract_transcripts(small_transcripts).collect()
+    }
+    turns = small_transcripts.collect()
+    assert len(got) == len(turns)
+    for t in turns:
+        want = dispatch.to_row(t["conv_id"], int(t["turn_idx"]), t["tool"], t["text"])
+        assert got[(t["conv_id"], t["turn_idx"])] == want
 
 
 def test_partition_invariance(spark, small_transcripts):

@@ -70,7 +70,7 @@ def test_extraction_stage_has_no_shuffle(spark, small_transcripts, tmp_path):
     src = _parquet_transcripts(spark, small_transcripts, tmp_path)
     ext = pipeline.extract_transcripts(src)
     plan = _plan(ext)
-    assert "Exchange" not in plan  # narrow: scan → mapInPandas, nothing else
+    assert "Exchange" not in plan  # narrow: scan → mapInArrow, nothing else
 
 
 def test_scalar_ops_stay_in_codegen(spark, tmp_path):

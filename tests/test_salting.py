@@ -1,5 +1,9 @@
-"""Salt-invariance (SURVEY.md §5.3): salted two-level aggregation equals
-the plain aggregation; heavy-hitter detection finds the skewed keys."""
+"""Skew handling (SURVEY.md §5.3): the per-conversation rollup absorbs a
+hot key by map-side partial aggregation, with no salt; heavy-hitter
+detection finds the skewed keys; the salted join equals the plain join."""
+
+import io
+from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
@@ -7,19 +11,48 @@ from pdf_extractors_spark import pipeline
 from pdf_extractors_spark.operators import salting
 
 
-def test_salted_stats_equal_plain_stats(spark, small_transcripts):
-    extracted = pipeline.extract_transcripts(small_transcripts).cache()
-    plain = {
-        r["conv_id"]: (r["turns"], r["extracted_chars"], r["n_spans"])
-        for r in pipeline.conv_stats(extracted).collect()
+def test_conv_stats_skewed_input_and_partial_aggregate_plan(spark):
+    """One 5,000-turn conversation among 50 light ones: ``conv_stats``
+    equals counts computed in Python, and its plan is one Exchange fed
+    by a partial HashAggregate — the map-side combine that ships at most
+    one row per hot key per map task, which is why the rollup needs no
+    salting."""
+    # (conv_id, turn_idx, extracted_text, parse_errors, n_spans)
+    rows = [("hot", i, None if i % 97 == 0 else "x" * (i % 13), int(i % 3 == 0), i % 4)
+            for i in range(5000)]
+    rows += [(f"c{k}", i, "y" * k, 0, k % 2) for k in range(50) for i in range(1 + k % 10)]
+    span = ("l", 0, 1, "v")
+    # four input partitions without an Exchange of their own
+    ext = spark.createDataFrame(
+        spark.sparkContext.parallelize(
+            [(c, t, x, e, [span] * n) for c, t, x, e, n in rows], 4
+        ),
+        "conv_id string, turn_idx int, extracted_text string, parse_errors int, "
+        "spans array<struct<label:string,start:int,end:int,value:string>>",
+    )
+    want: dict[str, list[int]] = {}
+    for c, _, x, e, n in rows:
+        w = want.setdefault(c, [0, 0, 0, 0])
+        w[0] += 1
+        w[1] += len(x) if x is not None else 0
+        w[2] += e
+        w[3] += n
+    got = {
+        r["conv_id"]: [r["turns"], r["extracted_chars"], r["parse_errors"], r["n_spans"]]
+        for r in pipeline.conv_stats(ext).collect()
     }
-    salted = {
-        r["conv_id"]: (r["turns"], r["extracted_chars"], r["n_spans"])
-        for r in salting.salted_conv_stats(
-            extracted, heavy_keys=list(plain)[:3], n_salts=8
-        ).collect()
-    }
-    assert plain == salted
+    assert got == want and got["hot"][0] == 5000
+
+    # a fresh, unexecuted DataFrame: AQE then prints only the initial plan
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        pipeline.conv_stats(ext).explain()
+    ops = [l.strip(" +-:") for l in buf.getvalue().splitlines()]
+    exchanges = [i for i, op in enumerate(ops) if op.startswith("Exchange")]
+    assert len(exchanges) == 1, buf.getvalue()
+    below = ops[exchanges[0] + 1]
+    assert below.startswith("HashAggregate") and "partial_count" in below, buf.getvalue()
+    assert "hashpartitioning(conv_id" in ops[exchanges[0]], buf.getvalue()
 
 
 def test_heavy_hitter_detection(spark):
