@@ -16,4 +16,12 @@ of multi-turn transcripts ``(conv_id, turn_idx, role, text, tool, ts)``:
   multimodal column plumbing.
 """
 
+from . import _worker
+
 __version__ = "0.1.0"
+
+# A Python worker imports this package when it unpickles a package
+# function; from then on its tasks skip re-reading unchanged zip
+# archives (see _worker).
+if _worker.in_spark_task():
+    _worker.install_zip_reload_guard()

@@ -24,7 +24,8 @@ Design (FIXTURES.md §4):
   would silently duplicate/misplace rows, and resuming over a different
   input snapshot would silently mix datasets; both raise instead.
 * manifests carry lineage + metrics: rows, bytes, parse_errors,
-  input fingerprint, timestamps.
+  input fingerprint, timestamps. Rows and parse_errors per bucket are
+  observed by the write job itself, so a run is one Spark job.
 
 Scale notes: the resume filter is a predicate on ``pmod(xxhash64(...))``,
 which plain parquet cannot prune with row-group stats — a resume run
@@ -45,7 +46,7 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from . import pipeline
@@ -151,6 +152,23 @@ def run_with_checkpoint(
     extracted = pipeline.extract_transcripts(src).withColumn(
         "bucket", bucket_of(F.col("conv_id"), n_buckets)
     )
+    # rows and parse_errors per bucket are counted by the write job
+    # itself, so a run is one Spark job, not a write plus a re-read
+    observed = Observation(f"checkpoint-{run_id}")
+    bucket = F.col("bucket")
+    extracted = extracted.observe(
+        observed,
+        *[
+            F.sum(F.when(bucket == k, 1).otherwise(0)).alias(f"rows_{k}")
+            for k in remaining
+        ],
+        *[
+            F.sum(F.when(bucket == k, F.col("parse_errors")).otherwise(0)).alias(
+                f"errs_{k}"
+            )
+            for k in remaining
+        ],
+    )
     # dynamic overwrite replaces exactly the bucket dirs this run touches
     # — a half-written dir from a killed run is replaced, not appended to
     (
@@ -160,25 +178,11 @@ def run_with_checkpoint(
         .partitionBy("bucket")
         .parquet(out_path)
     )
-
-    # stats per just-written bucket (reads the small output, not the input)
-    written_dirs = [
-        k for k in remaining if os.path.isdir(os.path.join(out_path, f"bucket={k}"))
-    ]
-    stats: dict[int, tuple[int, int]] = {}
-    if written_dirs:
-        rows = (
-            spark.read.option("basePath", out_path)
-            .parquet(*[os.path.join(out_path, f"bucket={k}") for k in written_dirs])
-            .groupBy("bucket")
-            .agg(F.count("*").alias("rows"), F.sum("parse_errors").alias("errs"))
-            .collect()
-        )
-        stats = {int(r["bucket"]): (int(r["rows"]), int(r["errs"] or 0)) for r in rows}
+    counts = observed.get
 
     processed: list[int] = []
     for k in remaining:
-        n_rows, n_errs = stats.get(k, (0, 0))
+        n_rows, n_errs = counts[f"rows_{k}"] or 0, counts[f"errs_{k}"] or 0
         bucket_dir = os.path.join(out_path, f"bucket={k}")
         manifest = {
             "partition_id": k,

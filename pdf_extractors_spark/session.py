@@ -9,6 +9,15 @@ would set on a 1000-executor cluster reading 100 TB:
   giant turns"),
 * shuffle partitions sized to cores in the sandbox; on a real cluster this
   is ~2-3x total executor cores and AQE coalesces down.
+
+Python workers import the package zip shipped here when they unpickle a
+package function, and that import installs ``_worker``'s guard: before
+every task PySpark calls ``importlib.invalidate_caches()``, which on
+CPython < 3.13 re-reads the directory of every zip archive on the
+worker's path (pyspark.zip, the spark-core jar, ...), 0.2-0.4 s of CPU
+per task. The guard skips the re-read while an archive's inode, size
+and mtime are unchanged. It is inert on CPython >= 3.13, which re-reads
+lazily, and is never installed in the driver's interpreter.
 """
 
 from __future__ import annotations

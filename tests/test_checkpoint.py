@@ -6,6 +6,8 @@ import json
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from pdf_extractors_spark import checkpoint, pipeline
 
 
@@ -44,10 +46,28 @@ def test_resume_skips_committed_and_matches_oneshot(spark, small_transcripts, tm
     )
 
 
+def _with_truncated_form_pages(spark, transcripts, n=6):
+    """``transcripts`` plus ``n`` one-turn conversations whose form page
+    is cut to a fifth, each of which extracts with parse_errors=1."""
+    from pdf_extractors_spark.fixtures import payloads
+
+    rows = []
+    for i in range(n):
+        tool, text = payloads.payload_for(f"trunc-{i}", 0, "form_page")
+        rows.append((f"trunc-{i}", 0, "tool", text[: len(text) // 5], tool))
+    extra = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string"
+    ).withColumn("ts", F.lit(None).cast("timestamp"))
+    return transcripts.unionByName(extra)
+
+
 def test_manifest_lineage_metrics(spark, small_transcripts, tmp_path):
+    """Manifest rows and parse_errors per bucket (counted by the write
+    job itself) equal a groupBy(bucket) read of the written output."""
     out = str(tmp_path / "m")
+    src = _with_truncated_form_pages(spark, small_transcripts)
     checkpoint.run_with_checkpoint(
-        spark, small_transcripts, out, n_buckets=4, input_snapshot_id="snap-1"
+        spark, src, out, n_buckets=4, input_snapshot_id="snap-1"
     )
     ms = checkpoint.committed_buckets(out)
     assert set(ms) == {0, 1, 2, 3}
@@ -56,9 +76,17 @@ def test_manifest_lineage_metrics(spark, small_transcripts, tmp_path):
         assert m["bytes"] > 0
         assert m["input_snapshot_id"] == "snap-1"
         assert m["committed_at"] >= m["started_at"]
+    written = {
+        r["bucket"]: (r["rows"], r["errs"])
+        for r in spark.read.parquet(out)
+        .groupBy("bucket")
+        .agg(F.count("*").alias("rows"), F.sum("parse_errors").alias("errs"))
+        .collect()
+    }
+    assert {k: (m["rows"], m["parse_errors"]) for k, m in ms.items()} == written
     agg = checkpoint.metrics(out)
-    assert agg["rows"] == small_transcripts.count()
-    assert agg["parse_errors"] == 0
+    assert agg["rows"] == src.count()
+    assert agg["parse_errors"] == 6
 
 
 def test_interrupted_bucket_leaves_no_manifest(spark, small_transcripts, tmp_path):
