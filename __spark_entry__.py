@@ -602,22 +602,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["dedup_clusters"] = q_dedup_clusters
 
-    def q_dedup_clusters_star(spark, sf):
-        """The SAME clusters via the large-star/small-star contraction
-        path (the high-diameter-graph algorithm) — value-checked against
-        the SAME recursive-CTE reachability oracle as dedup_clusters, so
-        the two algorithms are pinned to identical output by the gate."""
-        sigs = dedup.minhash_signatures(_spread(_read(spark, sf, "documents")), k=8)
-        pairs = dedup.lsh_candidates(sigs, bands=4, rows=2)
-        comp = dedup.connected_components(pairs, algorithm="star")
-        return _longify(
-            comp.select(
-                F.col("node").alias("doc_id"), F.col("comp").alias("cluster_id")
-            )
-        )
-
-    q["dedup_clusters_star"] = q_dedup_clusters_star
-
     def q_neardup_keep(spark, sf):
         """The near-dup keep-list a pipeline actually consumes: drop
         every clustered document except its representative (the cluster
@@ -8084,10 +8068,6 @@ def oracle_sql() -> dict[str, str]:
     }
     # quality_tiers re-derives quality_bp via the quality_score oracle,
     # then tiers per language — wrap-don't-duplicate
-    # the star-contraction CC path must produce the IDENTICAL clusters —
-    # same reachability oracle, so the gate pins both algorithms to one
-    # output
-    oracles["dedup_clusters_star"] = oracles["dedup_clusters"]
     oracles["compact_changelog"] = """
         with cl as (
           select user_id, event_id, ts,

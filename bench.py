@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 import warnings
@@ -241,13 +242,13 @@ def budget_check(
     median of (current median / baseline median), clipped to >=1 so a
     fast host never tightens budgets.
     """
-    ratios = sorted(
+    ratios = [
         timings[q] / R3_MEDIANS[q]
         for q in timings
         if q in R3_MEDIANS and R3_MEDIANS[q] > 0
-    )
+    ]
     weather_ratio = (
-        round(max(1.0, ratios[len(ratios) // 2]), 3) if ratios else 1.0
+        round(max(1.0, statistics.median(ratios)), 3) if ratios else 1.0
     )
     breaches: dict[str, dict] = {}
     advisory: dict[str, dict] = {}
@@ -412,6 +413,9 @@ def main() -> int:
     timings_min: dict[str, float] = {
         "extract_transcripts": round(extract_secs_min, 3)
     }
+    # re-measure reps taken past n_reps per budgeted query: they can only
+    # lower its min, so a rescued pass is visible in the output
+    extra_reps: dict[str, int] = {}
     if not extract_only:
         queries = entrymod.queries()
         for qname in BENCH_QUERIES:
@@ -450,7 +454,8 @@ def main() -> int:
                 while min(reps) > limit and extra < 2:
                     _one_rep()
                     extra += 1
-            timings[qname] = round(sorted(reps)[len(reps) // 2], 3)
+                extra_reps[qname] = extra
+            timings[qname] = round(statistics.median(reps), 3)
             timings_min[qname] = round(min(reps), 3)
 
     spark.stop()
@@ -501,6 +506,7 @@ def main() -> int:
                     "applicable": budget_applicable,
                     "breaches": budget_breaches,
                     "advisory_median_over_budget": budget_advisory,
+                    "extra_reps": extra_reps,
                     "pass": (not budget_breaches)
                     if budget_applicable
                     else None,

@@ -48,7 +48,8 @@ def main(argv: list[str] | None = None) -> int:
         "--snapshot-id",
         default=None,
         help="input snapshot identity recorded in manifests (resume "
-        "validation refuses to mix snapshots in one output)",
+        "validation refuses to mix snapshots in one output); default: "
+        "derived from the input files, their sizes and mtimes",
     )
     ap.add_argument(
         "--gen-convs",

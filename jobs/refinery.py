@@ -8,12 +8,13 @@ table, as ONE resumable job.
         --output /data/refined \
         --n-buckets 64 --budget 2048 --min-tokens 5
 
-Stages (each writes ``<output>/<stage>/`` and commits it atomically —
-parquet lands in a tmp dir that is renamed into place, then a
-``_stage.json`` lineage manifest with row counts and wall time is
-written; a re-submitted job skips every committed stage, and the
+Stages (each writes ``<output>/<stage>/`` and commits it through
+``checkpoint.commit_stage`` — parquet lands in a tmp dir that is renamed
+into place, its rows are counted by the write job, and a ``_stage.json``
+lineage manifest with row count and wall time is written atomically,
+last; a re-submitted job skips every committed stage, and the
 extraction stage additionally resumes at BUCKET granularity through
-checkpoint.py even when it was killed mid-stage):
+``checkpoint.run_with_checkpoint`` even when it was killed mid-stage):
 
   extracted/  Arrow-batched per-turn extraction (per-bucket manifests)
   docs/       conversation assembly: applyInArrow stitch of extracted
@@ -35,9 +36,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
-import time
 
 
 def _ensure_importable() -> None:
@@ -45,43 +44,6 @@ def _ensure_importable() -> None:
         import pdf_extractors_spark  # noqa: F401
     except ImportError:
         sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _stage_dir(out: str, name: str) -> str:
-    return os.path.join(out, name)
-
-
-def _committed(out: str, name: str) -> dict | None:
-    p = os.path.join(_stage_dir(out, name), "_stage.json")
-    if os.path.exists(p):
-        with open(p) as f:
-            return json.load(f)
-    return None
-
-
-def _commit_stage(out: str, name: str, df, extra: dict | None = None) -> dict:
-    """Write df as parquet into a tmp dir, rename into place, then write
-    the stage manifest INSIDE the committed dir (manifest-last: a crash
-    between rename and manifest write re-runs the stage, never trusts a
-    half-written one)."""
-    final = _stage_dir(out, name)
-    tmp = final + ".tmp"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    if os.path.isdir(final):
-        shutil.rmtree(final)
-    t0 = time.time()
-    df.write.mode("overwrite").parquet(tmp)
-    os.rename(tmp, final)
-    manifest = {
-        "stage": name,
-        "rows": int(df.sparkSession.read.parquet(final).count()),
-        "secs": round(time.time() - t0, 3),
-        **(extra or {}),
-    }
-    with open(os.path.join(final, "_stage.json"), "w") as f:
-        json.dump(manifest, f)
-    return manifest
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -134,8 +96,8 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps({"killed_after": stage}), flush=True)
             os._exit(137)
 
-    # -- stage 1: extraction (bucket-resumable inside the stage) --------
-    ext_dir = _stage_dir(args.output, "extracted")
+    # -- extraction (bucket-resumable inside the stage) ------------------
+    ext_dir = os.path.join(args.output, "extracted")
     transcripts = spark.read.parquet(args.input)
     res = checkpoint.run_with_checkpoint(
         spark, transcripts, ext_dir,
@@ -149,31 +111,18 @@ def main(argv: list[str] | None = None) -> int:
         "skipped_buckets": len(res["skipped"]),
     }
     _maybe_kill("extracted")
-    # plain-directory read: partition discovery adds the bucket column and
-    # skips the underscore-prefixed _manifests dir (no glob-probe WARN)
-    extracted = spark.read.parquet(ext_dir)
 
-    # -- stage 2: conversation assembly (applyInArrow) -------------------
-    if (m := _committed(args.output, "docs")) is not None:
-        report["stages"]["docs"] = {**m, "skipped": True}
-    else:
-        docs = pipeline.conv_stitch_arrow(
+    def assemble(extracted):
+        return pipeline.conv_stitch_arrow(
             extracted.select(
-                "conv_id", "turn_idx",
-                F.col("extracted_text").alias("text"),
+                "conv_id", "turn_idx", F.col("extracted_text").alias("text"),
             )
         )
-        report["stages"]["docs"] = _commit_stage(args.output, "docs", docs)
-    _maybe_kill("docs")
-    docs = spark.read.parquet(_stage_dir(args.output, "docs"))
 
-    # -- stage 3: text repair BEFORE any hash-keyed stage -----------------
-    # mojibake round-trip fix, then Unicode NFC: encoding-damaged or
-    # decomposed bytes are different md5 keys for the same text, so
-    # un-repaired input silently defeats the dedup stage that follows.
-    if (m := _committed(args.output, "repaired")) is not None:
-        report["stages"]["repaired"] = {**m, "skipped": True}
-    else:
+    def repair(docs):
+        # mojibake round-trip fix, then Unicode NFC: encoding-damaged or
+        # decomposed bytes are different md5 keys for the same text, so
+        # un-repaired input silently defeats the dedup stage that follows
         fixed = text_stats.mojibake_repair(
             docs, text_col="stitched_text", id_col="conv_id",
             keep_cols=("n_turns",),
@@ -182,7 +131,7 @@ def main(argv: list[str] | None = None) -> int:
             F.col("text_fixed").alias("stitched_text"),
             F.col("changed").alias("moji_changed"),
         )
-        nfc = text_stats.unicode_normalize(
+        return text_stats.unicode_normalize(
             fixed, text_col="stitched_text", id_col="conv_id",
             keep_cols=("n_turns", "moji_changed"),
         ).select(
@@ -191,48 +140,47 @@ def main(argv: list[str] | None = None) -> int:
             "moji_changed",
             F.col("changed").alias("nfc_changed"),
         )
-        report["stages"]["repaired"] = _commit_stage(
-            args.output, "repaired", nfc
-        )
-    _maybe_kill("repaired")
-    repaired = spark.read.parquet(_stage_dir(args.output, "repaired"))
 
-    # -- stage 4: exact dedup of repaired documents -----------------------
-    if (m := _committed(args.output, "dedup")) is not None:
-        report["stages"]["dedup"] = {**m, "skipped": True}
-    else:
-        deduped = dedup.dedup_documents(
+    def exact_dedup(repaired):
+        return dedup.dedup_documents(
             repaired, text_col="stitched_text", id_col="conv_id"
         )
-        report["stages"]["dedup"] = _commit_stage(args.output, "dedup", deduped)
-    _maybe_kill("dedup")
-    deduped = spark.read.parquet(_stage_dir(args.output, "dedup"))
 
-    # -- stage 5: quality gate -------------------------------------------
-    if (m := _committed(args.output, "kept")) is not None:
-        report["stages"]["kept"] = {**m, "skipped": True}
-    else:
-        toks = F.size(
-            F.split(F.trim(F.lower(F.col("stitched_text"))), r"\s+")
-        )
-        kept = deduped.withColumn("n_tokens", toks.cast("long")).filter(
+    def quality_gate(deduped):
+        toks = F.size(F.split(F.trim(F.lower(F.col("stitched_text"))), r"\s+"))
+        return deduped.withColumn("n_tokens", toks.cast("long")).filter(
             F.col("n_tokens") >= args.min_tokens
         )
-        report["stages"]["kept"] = _commit_stage(args.output, "kept", kept)
-    _maybe_kill("kept")
-    kept = spark.read.parquet(_stage_dir(args.output, "kept"))
 
-    # -- stage 6: budget-aligned packing ----------------------------------
-    if (m := _committed(args.output, "packed")) is not None:
-        report["stages"]["packed"] = {**m, "skipped": True}
-    else:
-        packed = sampling.pack_units(
+    def pack(kept):
+        return sampling.pack_units(
             kept, token_col="n_tokens", id_col="conv_id",
             budget=args.budget, n_buckets=args.n_buckets,
         )
-        report["stages"]["packed"] = _commit_stage(
-            args.output, "packed", packed, {"budget": args.budget}
-        )
+
+    stages = [
+        ("docs", assemble),
+        ("repaired", repair),
+        ("dedup", exact_dedup),
+        ("kept", quality_gate),
+        ("packed", pack),
+    ]
+    extra = {"packed": {"budget": args.budget}}
+    # each stage reads what the previous one committed (extracted/ by
+    # partition discovery, which skips the _manifests dir)
+    prev_dir = ext_dir
+    for name, build in stages:
+        stage_dir = os.path.join(args.output, name)
+        if (m := checkpoint.committed_stage(stage_dir)) is None:
+            m = checkpoint.commit_stage(
+                build(spark.read.parquet(prev_dir)), stage_dir,
+                **extra.get(name, {}),
+            )
+        else:
+            m = {**m, "skipped": True}
+        report["stages"][name] = m
+        _maybe_kill(name)
+        prev_dir = stage_dir
 
     print(json.dumps(report))
     spark.stop()

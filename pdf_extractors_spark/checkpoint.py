@@ -22,10 +22,18 @@ Design (FIXTURES.md §4):
 * a resume run validates that the manifest's ``n_buckets`` and
   ``input_snapshot_id`` match — resuming with a different bucket count
   would silently duplicate/misplace rows, and resuming over a different
-  input snapshot would silently mix datasets; both raise instead.
+  input snapshot would silently mix datasets; both raise instead. With
+  no explicit id the snapshot is derived from the input's files, their
+  sizes and mtimes (``input_identity``).
 * manifests carry lineage + metrics: rows, bytes, parse_errors,
   input fingerprint, timestamps. Rows and parse_errors per bucket are
   observed by the write job itself, so a run is one Spark job.
+* whole-stage commits (``commit_stage``/``committed_stage``, used by
+  ``jobs/refinery.py``) follow the same protocol: data into a tmp dir
+  renamed into place, rows observed by the write job, and a
+  ``_stage.json`` manifest written last. This module is the only writer
+  of manifests, and every manifest lands by tmp file + ``os.replace``, so
+  a kill mid-write leaves no manifest rather than a truncated one.
 
 Scale notes: the resume filter is a predicate on ``pmod(xxhash64(...))``,
 which plain parquet cannot prune with row-group stats — a resume run
@@ -41,10 +49,13 @@ pretending to checkpoint.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import shutil
 import time
 import uuid
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -52,6 +63,7 @@ from pyspark.sql import functions as F
 from . import pipeline
 
 MANIFEST_DIR = "_manifests"
+STAGE_MANIFEST = "_stage.json"
 
 
 def bucket_of(conv_id_col, n_buckets: int):
@@ -65,6 +77,68 @@ def _require_local(path: str) -> None:
             f"got {path!r}. On object storage / HDFS use Iceberg snapshot "
             f"commits instead (docs/SCALE.md §7)."
         )
+
+
+def _write_manifest(path: str, manifest: dict) -> None:
+    """Write ``manifest`` to ``path`` as a tmp file renamed into place: on
+    a local FS the rename is atomic, so a reader sees the whole manifest
+    or none."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(manifest, f)
+    os.replace(tmp, path)
+
+
+def commit_stage(df: DataFrame, stage_dir: str, **extra) -> dict:
+    """Write ``df`` as parquet to ``stage_dir`` and commit it: the data
+    lands in ``<stage_dir>.tmp``, which is renamed into place, and the
+    ``_stage.json`` manifest is written last. A kill before the manifest
+    leaves the stage uncommitted, so it re-runs. ``rows`` is counted by
+    the write job itself: one commit is one Spark job. Returns the
+    manifest: ``stage`` (the dir's name), ``rows``, ``secs`` and
+    ``extra``."""
+    _require_local(stage_dir)
+    tmp = stage_dir + ".tmp"
+    for d in (tmp, stage_dir):
+        shutil.rmtree(d, ignore_errors=True)
+    t0 = time.time()
+    observed = Observation()
+    df.observe(observed, F.count(F.lit(1)).alias("rows")).write.parquet(tmp)
+    os.rename(tmp, stage_dir)
+    manifest = {
+        "stage": os.path.basename(os.path.normpath(stage_dir)),
+        "rows": observed.get["rows"],
+        "secs": round(time.time() - t0, 3),
+        **extra,
+    }
+    _write_manifest(os.path.join(stage_dir, STAGE_MANIFEST), manifest)
+    return manifest
+
+
+def committed_stage(stage_dir: str) -> dict | None:
+    """The manifest of a committed stage, or None when it must (re)run."""
+    _require_local(stage_dir)
+    path = os.path.join(stage_dir, STAGE_MANIFEST)
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
+def input_identity(df: DataFrame) -> str:
+    """The default input snapshot id: a digest of the files ``df`` reads
+    and each local one's size and mtime (remote files count by name).
+    "unknown", which turns the check off, when ``df`` reads no files."""
+    files = sorted(df.inputFiles())
+    if not files:
+        return "unknown"
+    h = hashlib.sha1()
+    for uri in files:
+        u = urlparse(uri)
+        st = os.stat(unquote(u.path)) if u.scheme in ("", "file") else None
+        stamp = (st.st_size, st.st_mtime_ns) if st else None
+        h.update(f"{uri}\0{stamp}\n".encode())
+    return f"files-{h.hexdigest()[:16]}"
 
 
 def committed_buckets(out_path: str) -> dict[int, dict]:
@@ -102,12 +176,8 @@ def _validate_resume(
                 f"and misplace rows; rerun with --buckets {nb} or a fresh "
                 f"output path"
             )
-        snap = m.get("input_snapshot_id")
-        if (
-            snapshot not in (None, "unknown")
-            and snap not in (None, "unknown")
-            and snap != snapshot
-        ):
+        snap = m.get("input_snapshot_id", "unknown")
+        if snap != snapshot and "unknown" not in (snap, snapshot):
             raise ValueError(
                 f"resume over input snapshot {snapshot!r} but bucket {k} "
                 f"was committed from {snap!r} — output would silently mix "
@@ -129,12 +199,15 @@ def run_with_checkpoint(
 
     ``fail_after``: test hook — process only the first K uncommitted
     buckets this run, then raise (simulates a killed job).
+    ``input_snapshot_id``: the input's identity, recorded in each
+    manifest and checked on resume; None derives it with
+    ``input_identity``.
     Returns {"processed": [...], "skipped": [...]}.
     """
     _require_local(out_path)
     os.makedirs(os.path.join(out_path, MANIFEST_DIR), exist_ok=True)
     done = committed_buckets(out_path)
-    snapshot = input_snapshot_id or "unknown"
+    snapshot = input_snapshot_id or input_identity(transcripts)
     _validate_resume(done, n_buckets, snapshot)
 
     remaining = [k for k in range(n_buckets) if k not in done]
@@ -196,12 +269,8 @@ def run_with_checkpoint(
             "started_at": started,
             "committed_at": time.time(),
         }
-        # write-then-manifest: rename makes the commit atomic on a local FS
-        mpath = os.path.join(out_path, MANIFEST_DIR, f"{k}.json")
-        tmp = mpath + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(manifest, f)
-        os.replace(tmp, mpath)
+        # write-then-manifest
+        _write_manifest(os.path.join(out_path, MANIFEST_DIR, f"{k}.json"), manifest)
         processed.append(k)
 
     if fail_after is not None:

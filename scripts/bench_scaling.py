@@ -418,9 +418,12 @@ parallelism levels in separate JVMs.
 
 **Scaling efficiency = (throughput@4N / throughput@N) / 4 =
 {report["scaling_efficiency"]}** — gate ≥ 0.8: **{"PASS" if report["pass"] else "FAIL"}**.
-(The rows above are the MEDIAN well-conditioned attempt's raw numbers —
-the same attempt the headline statistic comes from; see the attempt log
-below for the full distribution.)
+(The rows above are the raw numbers of the MEDIAN well-conditioned
+attempt, the attempt the headline statistic comes from, but they do not
+reproduce it: the table's own medians give {tps_hi} / {tps_lo} / {four_n // n} =
+{round(tps_hi / tps_lo / (four_n / n), 3)}. An attempt's efficiency is the median of its three
+interleaved (N, 4N) pair ratios, not the ratio of its per-level median
+reps; see the attempt log below for the full distribution.)
 
 ## Attempt log (shared-VM honesty) and the gate statistic
 

@@ -95,6 +95,17 @@ def test_one_slow_rep_does_not_breach():
     assert "sn_pairs" in advisory
 
 
+def test_weather_ratio_is_the_true_median_for_even_counts():
+    # four ratios 1.2, 1.4, 1.8, 2.2: the median is (1.4 + 1.8) / 2 = 1.6;
+    # the upper middle element (1.8) would loosen every budget
+    names = sorted(bench.R3_MEDIANS)[:4]
+    timings = {
+        q: bench.R3_MEDIANS[q] * f for q, f in zip(names, (1.2, 1.4, 1.8, 2.2))
+    }
+    _, _, weather = bench.budget_check(timings, dict(timings))
+    assert weather == 1.6
+
+
 def test_fast_host_never_tightens():
     # Host 2x faster than baseline: control clips to 1.0 (never <1), so
     # a query at exactly its budget limit is not flagged.

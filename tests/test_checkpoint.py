@@ -157,3 +157,84 @@ def test_read_extracted_hides_uncommitted_buckets(spark, small_transcripts, tmp_
             spark, small_transcripts, "s3://bucket/out", n_buckets=4
         )
     shutil.rmtree(out)
+
+
+def test_resume_refuses_rewritten_input_by_default(spark, small_transcripts, tmp_path):
+    """With no explicit snapshot id the identity is derived from the input
+    files, sizes and mtimes: a re-read of the same files resumes, a
+    rewritten input file is refused instead of mixed into the output."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    inp = tmp_path / "input"
+    inp.mkdir()
+    pdf = small_transcripts.toPandas()
+    for i in range(3):
+        pq.write_table(
+            pa.Table.from_pandas(pdf.iloc[i::3], preserve_index=False),
+            inp / f"part-{i}.parquet",
+            coerce_timestamps="us",
+        )
+    out = str(tmp_path / "out")
+    for _ in range(2):  # the second run resumes over a fresh read
+        with pytest.raises(RuntimeError, match="injected failure"):
+            checkpoint.run_with_checkpoint(
+                spark, spark.read.parquet(str(inp)), out, n_buckets=4, fail_after=1
+            )
+    ids = {m["input_snapshot_id"] for m in checkpoint.committed_buckets(out).values()}
+    assert len(checkpoint.committed_buckets(out)) == 2
+    assert len(ids) == 1 and ids != {"unknown"}
+
+    rewritten = inp / "part-1.parquet"
+    pq.write_table(pq.read_table(rewritten).slice(1), rewritten)
+    with pytest.raises(ValueError, match="snapshot"):
+        checkpoint.run_with_checkpoint(
+            spark, spark.read.parquet(str(inp)), out, n_buckets=4
+        )
+
+
+def test_commit_stage_is_one_job_with_observed_rows(spark, small_transcripts, tmp_path):
+    """A stage commit is the write job alone: its manifest's rows come from
+    an Observation on that job and equal a re-read of the parquet."""
+    import os
+
+    stage_dir = str(tmp_path / "docs")
+    df = small_transcripts.filter(F.col("role") == "user").select("conv_id", "text")
+    sc = spark.sparkContext
+    sc.setJobGroup("commit-stage-test", "one stage commit")
+    try:
+        m = checkpoint.commit_stage(df, stage_dir, budget=512)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("commit-stage-test")) == 1
+    assert m["stage"] == "docs" and m["budget"] == 512 and m["secs"] >= 0
+    assert 0 < m["rows"] == spark.read.parquet(stage_dir).count()
+    assert checkpoint.committed_stage(stage_dir) == m
+    assert not os.path.exists(stage_dir + ".tmp")
+
+
+def test_commit_stage_killed_mid_manifest_stays_uncommitted(
+    spark, small_transcripts, tmp_path, monkeypatch
+):
+    """A manifest write that dies halfway leaves no _stage.json (the
+    manifest lands by rename), so the stage reads as uncommitted and its
+    re-run commits it."""
+    import os
+
+    stage_dir = str(tmp_path / "kept")
+    df = small_transcripts.select("conv_id", "turn_idx")
+
+    def dump_half(obj, f):
+        f.write(json.dumps(obj)[:10])
+        raise OSError("killed mid-manifest")
+
+    monkeypatch.setattr(json, "dump", dump_half)
+    with pytest.raises(OSError, match="mid-manifest"):
+        checkpoint.commit_stage(df, stage_dir)
+    monkeypatch.undo()
+    assert not os.path.exists(os.path.join(stage_dir, checkpoint.STAGE_MANIFEST))
+    assert checkpoint.committed_stage(stage_dir) is None
+
+    m = checkpoint.commit_stage(df, stage_dir)
+    assert checkpoint.committed_stage(stage_dir) == m
+    assert m["rows"] == small_transcripts.count()
