@@ -12,7 +12,7 @@ sandbox↔production mapping), runs the Arrow-batched extraction stage
 through the per-bucket checkpoint layer, and prints ONE JSON line of
 run metrics. A killed job re-submitted with the same ``--output``
 resumes: committed buckets are skipped, half-written ones are
-dynamically overwritten (checkpoint.py).
+replaced by the bucket's newly committed files (checkpoint.py).
 
 The driver config (master, executor counts, memory) belongs to
 spark-submit flags, not this script — it calls ``getOrCreate()`` and

@@ -166,18 +166,26 @@ def main(argv: list[str] | None = None) -> int:
         ("packed", pack),
     ]
     extra = {"packed": {"budget": args.budget}}
-    # each stage reads what the previous one committed (extracted/ by
-    # partition discovery, which skips the _manifests dir)
+
+    def read_committed(d: str):
+        # read with the schema the commit recorded: no read starts a
+        # schema-inference job, and extracted/ shows committed buckets only
+        if d == ext_dir:
+            return checkpoint.read_extracted(spark, d)
+        return checkpoint.read_stage(spark, d)
+
+    # each stage reads what the previous one committed
     prev_dir = ext_dir
     for name, build in stages:
         stage_dir = os.path.join(args.output, name)
         if (m := checkpoint.committed_stage(stage_dir)) is None:
             m = checkpoint.commit_stage(
-                build(spark.read.parquet(prev_dir)), stage_dir,
+                build(read_committed(prev_dir)), stage_dir,
                 **extra.get(name, {}),
             )
         else:
             m = {**m, "skipped": True}
+        m.pop("schema", None)
         report["stages"][name] = m
         _maybe_kill(name)
         prev_dir = stage_dir

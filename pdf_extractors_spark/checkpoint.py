@@ -11,11 +11,19 @@ Design (FIXTURES.md §4):
   ``conv_id`` (``pmod(xxhash64(conv_id), n)``) — the unit of commit.
   On Iceberg this unit would be the table partition + snapshot id; the
   bucket scheme is the same idea expressed over plain parquet.
-* one pass per RUN: the input is scanned once, filtered to the buckets
-  not yet committed, and written ``partitionBy(bucket)`` with dynamic
-  partition overwrite — so a partially-written bucket from a killed run
-  is replaced wholesale on resume, never appended to.
-* manifests are written per bucket only AFTER the data write succeeds
+* one pass and one Spark job per RUN: the input is scanned once,
+  filtered to the buckets not yet committed, and the extraction stage
+  itself writes the files (``_bucket_writer``, one ``mapInArrow``): each
+  task runs the kernel, splits its output by bucket and writes one
+  parquet file per bucket it saw, sorted by (conv_id, turn_idx), into
+  ``_staging-<run_id>/``. The job returns the list of files written by
+  successful task attempts; the driver commits it, bucket by bucket, by
+  replacing ``bucket=<k>/`` with that bucket's listed files (renamed in)
+  and then writing the manifest. A partially-written bucket from a
+  killed run is replaced wholesale on resume, never appended to, and
+  staging dirs a killed run left are removed when the next run starts
+  (a checkpoint has one writer).
+* manifests are written per bucket only AFTER its data is in place
   (write-then-manifest): a crash mid-run leaves data without manifests;
   readers (``read_extracted``/``metrics``) see only committed buckets,
   and the next run redoes exactly the uncommitted ones.
@@ -26,21 +34,27 @@ Design (FIXTURES.md §4):
   no explicit id the snapshot is derived from the input's files, their
   sizes and mtimes (``input_identity``).
 * manifests carry lineage + metrics: rows, bytes, parse_errors,
-  input fingerprint, timestamps. Rows and parse_errors per bucket are
-  observed by the write job itself, so a run is one Spark job.
+  input fingerprint, timestamps. Rows, parse_errors and bytes per bucket
+  come with the file list from the write job, so a run is one Spark job.
 * whole-stage commits (``commit_stage``/``committed_stage``, used by
   ``jobs/refinery.py``) follow the same protocol: data into a tmp dir
   renamed into place, rows observed by the write job, and a
-  ``_stage.json`` manifest written last. This module is the only writer
-  of manifests, and every manifest lands by tmp file + ``os.replace``, so
-  a kill mid-write leaves no manifest rather than a truncated one.
+  ``_stage.json`` manifest, which records the written schema so that
+  ``read_stage`` reads without a schema-inference job, written last.
+  This module is the only writer of manifests, and every manifest lands
+  by tmp file + ``os.replace``, so a kill mid-write leaves no manifest
+  rather than a truncated one.
 
 Scale notes: the resume filter is a predicate on ``pmod(xxhash64(...))``,
 which plain parquet cannot prune with row-group stats — a resume run
 re-SCANS the input once (it re-EXTRACTS only uncommitted buckets, which
 is where the cost is). On Iceberg with a ``bucket(N, conv_id)`` partition
 transform the same predicate becomes partition pruning and the scan
-itself shrinks. Checkpoint metadata uses local-filesystem atomic renames;
+itself shrinks. A task buffers its output per bucket to sort it: at
+most one ``maxPartitionBytes`` input split's worth of extracted rows.
+The staging files are written by the tasks and renamed by the driver,
+so both must see the same filesystem. Checkpoint metadata uses
+local-filesystem atomic renames;
 a production deployment over object storage replaces this file's
 manifest I/O with Iceberg snapshot commits / conditional PUTs
 (docs/SCALE.md §7) — passing a non-local URI raises rather than
@@ -59,10 +73,12 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from . import pipeline
 
 MANIFEST_DIR = "_manifests"
+STAGING_PREFIX = "_staging-"
 STAGE_MANIFEST = "_stage.json"
 
 
@@ -95,7 +111,8 @@ def commit_stage(df: DataFrame, stage_dir: str, **extra) -> dict:
     ``_stage.json`` manifest is written last. A kill before the manifest
     leaves the stage uncommitted, so it re-runs. ``rows`` is counted by
     the write job itself: one commit is one Spark job. Returns the
-    manifest: ``stage`` (the dir's name), ``rows``, ``secs`` and
+    manifest: ``stage`` (the dir's name), ``rows``, ``secs``, ``schema``
+    (the written schema, which ``read_stage`` reads with) and
     ``extra``."""
     _require_local(stage_dir)
     tmp = stage_dir + ".tmp"
@@ -109,6 +126,7 @@ def commit_stage(df: DataFrame, stage_dir: str, **extra) -> dict:
         "stage": os.path.basename(os.path.normpath(stage_dir)),
         "rows": observed.get["rows"],
         "secs": round(time.time() - t0, 3),
+        "schema": df.schema.jsonValue(),
         **extra,
     }
     _write_manifest(os.path.join(stage_dir, STAGE_MANIFEST), manifest)
@@ -123,6 +141,15 @@ def committed_stage(stage_dir: str) -> dict | None:
         return None
     with open(path) as f:
         return json.load(f)
+
+
+def read_stage(spark: SparkSession, stage_dir: str) -> DataFrame:
+    """Read a committed stage with the schema its manifest recorded, so
+    the read starts no schema-inference job (a manifest without one falls
+    back to inference)."""
+    schema = (committed_stage(stage_dir) or {}).get("schema")
+    reader = spark.read.schema(StructType.fromJson(schema)) if schema else spark.read
+    return reader.parquet(stage_dir)
 
 
 def input_identity(df: DataFrame) -> str:
@@ -156,14 +183,6 @@ def committed_buckets(out_path: str) -> dict[int, dict]:
     return out
 
 
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for name in files:
-            total += os.path.getsize(os.path.join(root, name))
-    return total
-
-
 def _validate_resume(
     done: dict[int, dict], n_buckets: int, snapshot: str
 ) -> None:
@@ -185,6 +204,73 @@ def _validate_resume(
             )
 
 
+def _bucket_writer(staging: str):
+    """The write side of a checkpoint run, run inside the extraction stage
+    (``mapInArrow``): feeds the task's batches (conv_id, turn_idx, tool,
+    text, bucket) through the one kernel, splits its output by the input's
+    ``bucket`` column and, at the end of the task, writes one parquet file
+    per bucket seen, sorted by (conv_id, turn_idx), under
+    ``<staging>/bucket=<k>/``. Names carry the partition and the task
+    attempt, so two attempts never write the same file. Yields one row per
+    file: (bucket, path, rows, parse_errors, bytes); only files named by a
+    successful attempt reach the driver's commit."""
+
+    def write(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(pipeline.EXTRACTED_SCHEMA)
+        buckets: list = []
+
+        def feed():
+            # the kernel yields one output batch per input batch, in order
+            for batch in batches:
+                buckets.append(batch.column("bucket"))
+                yield batch
+
+        parts: dict[int, list] = {}
+        for out in pipeline._extract_batches_arrow(feed()):
+            bucket = buckets.pop(0)
+            for k in pc.unique(bucket).to_pylist():
+                parts.setdefault(k, []).append(out.filter(pc.equal(bucket, k)))
+
+        ctx = TaskContext.get()
+        name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
+        written = []
+        for k, outs in sorted(parts.items()):
+            table = (
+                pa.Table.from_batches(outs)
+                .cast(schema)
+                .sort_by(
+                    [("conv_id", "ascending"), ("turn_idx", "ascending")],
+                    null_placement="at_start",
+                )
+            )
+            bucket_dir = os.path.join(staging, f"bucket={k}")
+            os.makedirs(bucket_dir, exist_ok=True)
+            path = os.path.join(bucket_dir, name)
+            pq.write_table(table, path)
+            errs = pc.sum(table.column("parse_errors")).as_py() or 0
+            written.append((k, path, table.num_rows, errs, os.path.getsize(path)))
+        if written:
+            k, path, rows, errs, size = zip(*written)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(k, pa.int32()),
+                    pa.array(path, pa.string()),
+                    pa.array(rows, pa.int64()),
+                    pa.array(errs, pa.int64()),
+                    pa.array(size, pa.int64()),
+                ],
+                names=["bucket", "path", "rows", "parse_errors", "bytes"],
+            )
+
+    return write
+
+
 def run_with_checkpoint(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -195,7 +281,8 @@ def run_with_checkpoint(
 ) -> dict:
     """Extract ``transcripts`` into ``out_path``, committing per bucket
     and skipping buckets already committed by a previous run. ONE input
-    scan + one partitioned write per run — never a scan per bucket.
+    scan and one Spark job per run: the extraction stage writes the bucket
+    files (``_bucket_writer``), and the driver commits the list it gets.
 
     ``fail_after``: test hook — process only the first K uncommitted
     buckets this run, then raise (simulates a killed job).
@@ -206,6 +293,11 @@ def run_with_checkpoint(
     """
     _require_local(out_path)
     os.makedirs(os.path.join(out_path, MANIFEST_DIR), exist_ok=True)
+    # a checkpoint has one writer: staging dirs left here are a killed
+    # run's, and no manifest names their files
+    for name in os.listdir(out_path):
+        if name.startswith(STAGING_PREFIX):
+            shutil.rmtree(os.path.join(out_path, name))
     done = committed_buckets(out_path)
     snapshot = input_snapshot_id or input_identity(transcripts)
     _validate_resume(done, n_buckets, snapshot)
@@ -219,51 +311,38 @@ def run_with_checkpoint(
 
     run_id = uuid.uuid4().hex[:12]
     started = time.time()
+    staging = os.path.join(out_path, f"{STAGING_PREFIX}{run_id}")
     src = transcripts.withColumn("bucket", bucket_of(F.col("conv_id"), n_buckets))
     if skipped or fail_after is not None:
         src = src.filter(F.col("bucket").isin(remaining))
-    extracted = pipeline.extract_transcripts(src).withColumn(
-        "bucket", bucket_of(F.col("conv_id"), n_buckets)
-    )
-    # rows and parse_errors per bucket are counted by the write job
-    # itself, so a run is one Spark job, not a write plus a re-read
-    observed = Observation(f"checkpoint-{run_id}")
-    bucket = F.col("bucket")
-    extracted = extracted.observe(
-        observed,
-        *[
-            F.sum(F.when(bucket == k, 1).otherwise(0)).alias(f"rows_{k}")
-            for k in remaining
-        ],
-        *[
-            F.sum(F.when(bucket == k, F.col("parse_errors")).otherwise(0)).alias(
-                f"errs_{k}"
-            )
-            for k in remaining
-        ],
-    )
-    # dynamic overwrite replaces exactly the bucket dirs this run touches
-    # — a half-written dir from a killed run is replaced, not appended to
-    (
-        extracted.sortWithinPartitions("conv_id", "turn_idx")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(out_path)
-    )
-    counts = observed.get
+    files: dict[int, list] = {}
+    for r in (
+        src.select("conv_id", "turn_idx", "tool", "text", "bucket")
+        .mapInArrow(
+            _bucket_writer(os.path.abspath(staging)),
+            "bucket int, path string, rows long, parse_errors long, bytes long",
+        )
+        .collect()
+    ):
+        files.setdefault(r["bucket"], []).append(r)
 
     processed: list[int] = []
     for k in remaining:
-        n_rows, n_errs = counts[f"rows_{k}"] or 0, counts[f"errs_{k}"] or 0
+        # a bucket dir without a manifest is a killed run's: replace it
         bucket_dir = os.path.join(out_path, f"bucket={k}")
+        shutil.rmtree(bucket_dir, ignore_errors=True)
+        listed = files.get(k, [])
+        if listed:
+            os.makedirs(bucket_dir)
+        for f in listed:
+            os.rename(f["path"], os.path.join(bucket_dir, os.path.basename(f["path"])))
         manifest = {
             "partition_id": k,
             "status": "committed",
             "n_buckets": n_buckets,
-            "rows": n_rows,
-            "bytes": _dir_bytes(bucket_dir) if os.path.isdir(bucket_dir) else 0,
-            "parse_errors": n_errs,
+            "rows": sum(f["rows"] for f in listed),
+            "bytes": sum(f["bytes"] for f in listed),
+            "parse_errors": sum(f["parse_errors"] for f in listed),
             "input_snapshot_id": snapshot,
             "run_id": run_id,
             "started_at": started,
@@ -272,6 +351,7 @@ def run_with_checkpoint(
         # write-then-manifest
         _write_manifest(os.path.join(out_path, MANIFEST_DIR, f"{k}.json"), manifest)
         processed.append(k)
+    shutil.rmtree(staging, ignore_errors=True)
 
     if fail_after is not None:
         raise RuntimeError(f"injected failure after {fail_after} buckets")
@@ -291,7 +371,7 @@ def read_extracted(spark: SparkSession, out_path: str) -> DataFrame:
     ]
     if not dirs:
         return spark.createDataFrame([], pipeline.EXTRACTED_SCHEMA)
-    return spark.read.parquet(*dirs)
+    return spark.read.schema(pipeline.EXTRACTED_SCHEMA).parquet(*dirs)
 
 
 def metrics(out_path: str) -> dict:

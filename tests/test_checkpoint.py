@@ -238,3 +238,133 @@ def test_commit_stage_killed_mid_manifest_stays_uncommitted(
     m = checkpoint.commit_stage(df, stage_dir)
     assert checkpoint.committed_stage(stage_dir) == m
     assert m["rows"] == small_transcripts.count()
+
+
+def _bucket_files(out):
+    import glob
+    import os
+
+    return {
+        int(os.path.basename(d).split("=", 1)[1]): sorted(os.listdir(d))
+        for d in glob.glob(os.path.join(out, "bucket=*"))
+    }
+
+
+def _digest(df):
+    import hashlib
+
+    rows = sorted(
+        repr((r["conv_id"], r["turn_idx"], r["kind"], r["extracted_text"],
+              r["spans"], r["records"], r["parse_errors"]))
+        for r in df.collect()
+    )
+    return hashlib.sha1("\n".join(rows).encode()).hexdigest()
+
+
+def test_committed_bucket_files_are_sorted(spark, small_transcripts, tmp_path):
+    """Every committed bucket file is in (conv_id, turn_idx) order, also
+    when the tasks see their keys shuffled."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "sorted")
+    checkpoint.run_with_checkpoint(
+        spark, small_transcripts.orderBy(F.rand(7)), out, n_buckets=4,
+        input_snapshot_id="snap-sorted",
+    )
+    checked = 0
+    for k, names in _bucket_files(out).items():
+        for name in names:
+            if not name.endswith(".parquet"):
+                continue
+            t = pq.read_table(os.path.join(out, f"bucket={k}", name),
+                              columns=["conv_id", "turn_idx"])
+            keys = list(zip(t.column("conv_id").to_pylist(),
+                            t.column("turn_idx").to_pylist()))
+            assert keys == sorted(keys), f"bucket={k}/{name} is out of order"
+            checked += len(keys)
+    assert checked == small_transcripts.count()
+
+
+def test_task_failure_inside_write_commits_nothing(spark, small_transcripts, tmp_path):
+    """A task that raises inside the write job, after other tasks wrote
+    their files, fails the run without committing anything; a clean resume
+    then equals a one-shot run and leaves only committed files behind."""
+    import glob
+    import os
+    import time
+
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "taskfail")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        checkpoint.run_with_checkpoint(
+            spark, small_transcripts, out, n_buckets=6, fail_after=2,
+            input_snapshot_id="snap-tf",
+        )
+    before = checkpoint.committed_buckets(out)
+    rows_before = _digest(checkpoint.read_extracted(spark, out))
+    metrics_before = checkpoint.metrics(out)
+
+    # a conversation in a bucket the next run redoes
+    victim = (
+        small_transcripts.withColumn("bucket", checkpoint.bucket_of(F.col("conv_id"), 6))
+        .filter(~F.col("bucket").isin(list(before)))
+        .select("conv_id").first()["conv_id"]
+    )
+    staged = os.path.join(out, checkpoint.STAGING_PREFIX + "*", "bucket=*", "*.parquet")
+
+    @F.udf("string")
+    def fail_on_victim(conv_id, text):
+        if conv_id == victim:
+            deadline = time.time() + 60
+            while not glob.glob(staged) and time.time() < deadline:
+                time.sleep(0.05)  # let the other tasks write their files
+            raise ValueError("injected task failure")
+        return text
+
+    poisoned = small_transcripts.withColumn(
+        "text", fail_on_victim(F.col("conv_id"), F.col("text"))
+    )
+    with pytest.raises(Exception, match="injected task failure"):
+        checkpoint.run_with_checkpoint(
+            spark, poisoned, out, n_buckets=6, input_snapshot_id="snap-tf"
+        )
+    assert glob.glob(staged), "no task wrote a file before the failure"
+    assert checkpoint.committed_buckets(out) == before
+    assert _digest(checkpoint.read_extracted(spark, out)) == rows_before
+    assert checkpoint.metrics(out) == metrics_before
+
+    res = checkpoint.run_with_checkpoint(
+        spark, small_transcripts, out, n_buckets=6, input_snapshot_id="snap-tf"
+    )
+    assert res["skipped"] == sorted(before) and len(res["processed"]) == 4
+    oneshot = str(tmp_path / "taskfail-oneshot")
+    checkpoint.run_with_checkpoint(spark, small_transcripts, oneshot, n_buckets=6)
+    assert _digest(checkpoint.read_extracted(spark, out)) == _digest(
+        checkpoint.read_extracted(spark, oneshot)
+    )
+    assert not glob.glob(os.path.join(out, checkpoint.STAGING_PREFIX + "*"))
+    committed = checkpoint.committed_buckets(out)
+    for k, names in _bucket_files(out).items():
+        paths = [os.path.join(out, f"bucket={k}", n) for n in names]
+        assert all(n.endswith(".parquet") for n in names), names
+        assert sum(pq.ParquetFile(p).metadata.num_rows for p in paths) == committed[k]["rows"]
+        assert sum(os.path.getsize(p) for p in paths) == committed[k]["bytes"]
+
+
+def test_checkpoint_run_is_one_job(spark, small_transcripts, tmp_path):
+    """With an explicit snapshot id a checkpoint run starts exactly one
+    Spark job: the extraction stage writes the files, the driver commits
+    the list."""
+    sc = spark.sparkContext
+    sc.setJobGroup("checkpoint-one-job", "one checkpoint run")
+    try:
+        checkpoint.run_with_checkpoint(
+            spark, small_transcripts, str(tmp_path / "one"), n_buckets=4,
+            input_snapshot_id="snap-one",
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("checkpoint-one-job")) == 1

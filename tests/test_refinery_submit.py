@@ -81,3 +81,46 @@ def test_refinery_submit_stages_and_resume(tmp_path):
     assert st3["kept"]["rows"] == st["kept"]["rows"]
     for name in ("docs", "repaired", "dedup", "packed"):
         assert st3[name].get("skipped") is True
+
+
+def test_refinery_stage_reads_start_no_job(spark, tmp_path, monkeypatch, capsys):
+    """Every stage reads the previous stage's committed output with the
+    schema its manifest recorded, so no read starts a schema-inference
+    job: a fresh run is its commits plus the input read, and a resume with
+    every stage committed is the input read alone."""
+    import importlib.util
+
+    from pyspark.sql import SparkSession
+
+    from pdf_extractors_spark.fixtures import gen
+
+    spec = importlib.util.spec_from_file_location(
+        "refinery", os.path.join(REPO, "jobs", "refinery.py")
+    )
+    refinery = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(refinery)
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+
+    inp, outp = str(tmp_path / "transcripts"), str(tmp_path / "refined")
+    gen.materialize(spark, inp, n_convs=12, max_turns=20)
+    args = [
+        "--input", inp, "--output", outp, "--n-buckets", "4",
+        "--min-tokens", "3", "--budget", "512", "--snapshot-id", "snap-1",
+    ]
+    sc = spark.sparkContext
+
+    def jobs_of(group: str) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            assert refinery.main(args) == 0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLogLevel("ERROR")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    fresh = jobs_of("refinery-fresh")
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert fresh == 11
+    assert report["stages"]["packed"]["rows"] == report["stages"]["kept"]["rows"] > 0
+    assert "schema" not in report["stages"]["docs"]
+    assert jobs_of("refinery-resume") == 1
