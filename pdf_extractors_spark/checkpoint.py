@@ -86,13 +86,18 @@ def bucket_of(conv_id_col, n_buckets: int):
     return F.pmod(F.xxhash64(conv_id_col), F.lit(n_buckets)).cast("int")
 
 
-def _require_local(path: str) -> None:
-    if "://" in path and not path.startswith("file://"):
+def _require_local(path: str) -> str:
+    """The local-filesystem path of ``path``: a plain path as it is, a
+    ``file:`` URI without its scheme. Any other URI raises."""
+    if path.startswith("file:"):
+        return unquote(urlparse(path).path)
+    if "://" in path:
         raise NotImplementedError(
             f"checkpoint manifests use local-filesystem atomic renames; "
             f"got {path!r}. On object storage / HDFS use Iceberg snapshot "
             f"commits instead (docs/SCALE.md §7)."
         )
+    return path
 
 
 def _write_manifest(path: str, manifest: dict) -> None:
@@ -114,7 +119,7 @@ def commit_stage(df: DataFrame, stage_dir: str, **extra) -> dict:
     manifest: ``stage`` (the dir's name), ``rows``, ``secs``, ``schema``
     (the written schema, which ``read_stage`` reads with) and
     ``extra``."""
-    _require_local(stage_dir)
+    stage_dir = _require_local(stage_dir)
     tmp = stage_dir + ".tmp"
     for d in (tmp, stage_dir):
         shutil.rmtree(d, ignore_errors=True)
@@ -135,7 +140,7 @@ def commit_stage(df: DataFrame, stage_dir: str, **extra) -> dict:
 
 def committed_stage(stage_dir: str) -> dict | None:
     """The manifest of a committed stage, or None when it must (re)run."""
-    _require_local(stage_dir)
+    stage_dir = _require_local(stage_dir)
     path = os.path.join(stage_dir, STAGE_MANIFEST)
     if not os.path.exists(path):
         return None
@@ -169,6 +174,7 @@ def input_identity(df: DataFrame) -> str:
 
 
 def committed_buckets(out_path: str) -> dict[int, dict]:
+    out_path = _require_local(out_path)
     mdir = os.path.join(out_path, MANIFEST_DIR)
     if not os.path.isdir(mdir):
         return {}
@@ -291,7 +297,7 @@ def run_with_checkpoint(
     ``input_identity``.
     Returns {"processed": [...], "skipped": [...]}.
     """
-    _require_local(out_path)
+    out_path = _require_local(out_path)
     os.makedirs(os.path.join(out_path, MANIFEST_DIR), exist_ok=True)
     # a checkpoint has one writer: staging dirs left here are a killed
     # run's, and no manifest names their files
@@ -363,6 +369,7 @@ def read_extracted(spark: SparkSession, out_path: str) -> DataFrame:
     never reached its manifest is invisible, mirroring the resume path
     (uncommitted dirs would otherwise leak rows that disagree with
     ``metrics()``)."""
+    out_path = _require_local(out_path)
     done = committed_buckets(out_path)
     dirs = [
         os.path.join(out_path, f"bucket={k}")

@@ -368,3 +368,40 @@ def test_checkpoint_run_is_one_job(spark, small_transcripts, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup("checkpoint-one-job")) == 1
+
+
+def test_file_uri_output_lands_at_its_path(
+    spark, small_transcripts, tmp_path, monkeypatch
+):
+    """A ``file://`` output is the local path it names: manifests, bucket
+    files and stage commits land there, nothing lands under the working
+    directory, and the readers read the run back."""
+    import os
+
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    out = tmp_path / "out"
+    uri = f"file://{out}"
+    assert checkpoint.run_with_checkpoint(spark, small_transcripts, uri, n_buckets=4) == {
+        "processed": [0, 1, 2, 3],
+        "skipped": [],
+    }
+    assert sorted(os.listdir(out / checkpoint.MANIFEST_DIR)) == [
+        f"{k}.json" for k in range(4)
+    ]
+    assert sorted(p.name for p in out.glob("bucket=*/*.parquet") if p.stat().st_size)
+    assert checkpoint.committed_buckets(uri) == checkpoint.committed_buckets(str(out))
+    assert checkpoint.read_extracted(spark, uri).count() == small_transcripts.count()
+    assert checkpoint.metrics(uri)["rows"] == small_transcripts.count()
+    assert checkpoint.run_with_checkpoint(spark, small_transcripts, uri, n_buckets=4) == {
+        "processed": [],
+        "skipped": [0, 1, 2, 3],
+    }
+
+    stage_uri = f"file://{tmp_path / 'stage'}"
+    m = checkpoint.commit_stage(small_transcripts.select("conv_id"), stage_uri)
+    assert (tmp_path / "stage" / checkpoint.STAGE_MANIFEST).is_file()
+    assert checkpoint.committed_stage(stage_uri) == m
+    assert checkpoint.read_stage(spark, stage_uri).count() == m["rows"]
+    assert os.listdir(cwd) == []

@@ -133,7 +133,7 @@ def test_workers_skip_rereads_after_a_package_job(spark, small_transcripts):
     assert len(rows) == 4
     for r in rows:
         assert r["installed"] == (sys.version_info < (3, 13)), r
-        assert r["zips"] > 0, r  # pyspark.zip at least: the count means something
+        assert r["zips"] > 0, r  # the py4j zip at least: the count means something
         if r["installed"]:
             assert r["reads"] == 0, r
     # the driver runs no task, so its interpreter is left unguarded
