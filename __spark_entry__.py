@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from pdf_extractors_spark import pipeline
 from pdf_extractors_spark.operators import dedup, similarity, text_stats
 from pdf_extractors_spark.operators.text_stats import BPE_TOKEN_RE, STOPWORDS
-from pdf_extractors_spark.session import _package_zip
+from pdf_extractors_spark.session import prepare
 
 # ---------------------------------------------------------------- helpers
 
@@ -84,31 +84,8 @@ _GOPHER_SQL = r"""
 # DuckDB side.
 
 
-_PREPARED: set[int] = set()
-
-
-def _ship_package(spark: SparkSession) -> None:
-    """Prepare an externally-created SparkSession: ship the package to
-    Python workers (equivalent of --py-files) and pre-initialize Spark 4's
-    ICU collation class single-threaded — its class-init takes ~5s and
-    degrades to minutes when a wide stage's tasks race it (see
-    session.get_spark)."""
-    key = id(spark)
-    if key in _PREPARED:
-        return
-    _PREPARED.add(key)
-    try:
-        spark.sparkContext.addPyFile(_package_zip())
-    except Exception:
-        pass  # already added in this context
-    try:
-        spark.range(1).selectExpr("lower('ICU-WARMUP') as w").collect()
-    except Exception:
-        pass
-
-
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    _ship_package(spark)
+    prepare(spark)
     return spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
 
 
@@ -159,7 +136,7 @@ def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet under /tmp (FIXTURES.md §1; exact input_hint schema)."""
     from pdf_extractors_spark.fixtures import gen
 
-    _ship_package(spark)
+    prepare(spark)
     path, n_convs = _transcripts_spec(sf_dir)
     gen.materialize(spark, path, n_convs=n_convs, max_turns=200)
     return spark.read.parquet(path)
@@ -218,7 +195,7 @@ def _oracle_transcripts_file() -> str:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: boilerplate-strip + span extraction (north rule) over the
     sf0.001 documents table via the Arrow-batched extraction stage."""
-    _ship_package(spark)
+    prepare(spark)
     docs = _read(spark, "/root/testdata/sf0.001", "documents")
     turns = docs.select(
         F.col("doc_id").cast("string").alias("conv_id"),
@@ -1496,7 +1473,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         extraction (deterministic stub decode)."""
         from pdf_extractors_spark.operators import multimodal
 
-        _ship_package(spark)
+        prepare(spark)
         media = multimodal.synth_media(spark, n=64)
         return _longify(
             multimodal.extract_features(media, fake=True).select(

@@ -66,17 +66,10 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from pdf_extractors_spark import checkpoint
+    from pdf_extractors_spark.session import prepare
 
-    spark = SparkSession.builder.appName("transcript-extract").getOrCreate()
+    spark = prepare(SparkSession.builder.appName("transcript-extract").getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
-    # workers need the package too: under --py-files this re-add is
-    # harmless; from a bare checkout it is what ships the code
-    try:
-        from pdf_extractors_spark.session import _package_zip
-
-        spark.sparkContext.addPyFile(_package_zip())
-    except Exception:
-        pass
 
     if args.gen_convs:
         from pdf_extractors_spark.fixtures import gen

@@ -67,15 +67,10 @@ def main(argv: list[str] | None = None) -> int:
 
     from pdf_extractors_spark import checkpoint, pipeline
     from pdf_extractors_spark.operators import dedup, sampling, text_stats
+    from pdf_extractors_spark.session import prepare
 
-    spark = SparkSession.builder.appName("transcript-refinery").getOrCreate()
+    spark = prepare(SparkSession.builder.appName("transcript-refinery").getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
-    try:
-        from pdf_extractors_spark.session import _package_zip
-
-        spark.sparkContext.addPyFile(_package_zip())
-    except Exception:
-        pass
 
     if args.gen_convs:
         from pdf_extractors_spark.fixtures import gen

@@ -212,8 +212,8 @@ def _validate_resume(
 
 def _bucket_writer(staging: str):
     """The write side of a checkpoint run, run inside the extraction stage
-    (``mapInArrow``): feeds the task's batches (conv_id, turn_idx, tool,
-    text, bucket) through the one kernel, splits its output by the input's
+    (``mapInArrow``): runs the kernel on each of the task's batches
+    (conv_id, turn_idx, tool, text, bucket), splits its output by the input's
     ``bucket`` column and, at the end of the task, writes one parquet file
     per bucket seen, sorted by (conv_id, turn_idx), under
     ``<staging>/bucket=<k>/``. Names carry the partition and the task
@@ -226,20 +226,11 @@ def _bucket_writer(staging: str):
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
         from pyspark import TaskContext
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        schema = to_arrow_schema(pipeline.EXTRACTED_SCHEMA)
-        buckets: list = []
-
-        def feed():
-            # the kernel yields one output batch per input batch, in order
-            for batch in batches:
-                buckets.append(batch.column("bucket"))
-                yield batch
 
         parts: dict[int, list] = {}
-        for out in pipeline._extract_batches_arrow(feed()):
-            bucket = buckets.pop(0)
+        for batch in batches:
+            out = pipeline._extract_batch(batch)
+            bucket = batch.column("bucket")
             for k in pc.unique(bucket).to_pylist():
                 parts.setdefault(k, []).append(out.filter(pc.equal(bucket, k)))
 
@@ -249,7 +240,6 @@ def _bucket_writer(staging: str):
         for k, outs in sorted(parts.items()):
             table = (
                 pa.Table.from_batches(outs)
-                .cast(schema)
                 .sort_by(
                     [("conv_id", "ascending"), ("turn_idx", "ascending")],
                     null_placement="at_start",

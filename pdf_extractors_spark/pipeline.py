@@ -56,54 +56,48 @@ EXTRACTED_SCHEMA = StructType(
 )
 
 
-def _extract_batches_arrow(batches):
-    """The extraction kernel (``mapInArrow``): runs once per Arrow record
-    batch (≤ spark.sql.execution.arrow.maxRecordsPerBatch rows) with no
-    pandas materialization on either side of the Python worker. The
-    pass-through columns (conv_id, turn_idx, tool) are reused zero-copy;
-    only the four computed columns are built, in C, via ``pa.array``."""
+def _extract_batch(batch):
+    """The extraction kernel for one Arrow record batch (≤
+    spark.sql.execution.arrow.maxRecordsPerBatch rows), with no pandas
+    materialization on either side. The pass-through columns (conv_id,
+    turn_idx, tool) are reused zero-copy; only the four computed columns
+    are built, in C, via ``pa.array``."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     from .extractors.dispatch import dumps_records as _dumps
 
-    span_type = pa.list_(
-        pa.struct(
-            [
-                pa.field("label", pa.string()),
-                pa.field("start", pa.int32()),
-                pa.field("end", pa.int32()),
-                pa.field("value", pa.string()),
-            ]
-        )
+    schema = to_arrow_schema(EXTRACTED_SCHEMA)
+    texts: list[str] = []
+    spans: list[list] = []
+    records: list[str] = []
+    errors: list[int] = []
+    for kind, payload in zip(
+        batch.column("tool").to_pylist(), batch.column("text").to_pylist()
+    ):
+        out = dispatch.extract_one(kind, payload)
+        texts.append(out["extracted_text"])
+        spans.append(out["spans"])
+        records.append(_dumps(out["records"]))
+        errors.append(out["parse_errors"])
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column("conv_id"),
+            batch.column("turn_idx"),
+            batch.column("tool"),
+            pa.array(texts, pa.string()),
+            pa.array(spans, schema.field("spans").type),
+            pa.array(records, pa.string()),
+            pa.array(errors, pa.int32()),
+        ],
+        schema=schema,
     )
-    for batch in batches:
-        tools = batch.column("tool").to_pylist()
-        payloads = batch.column("text").to_pylist()
-        texts: list[str] = []
-        spans: list[list] = []
-        records: list[str] = []
-        errors: list[int] = []
-        for kind, payload in zip(tools, payloads):
-            out = dispatch.extract_one(kind, payload)
-            texts.append(out["extracted_text"])
-            spans.append(out["spans"])
-            records.append(_dumps(out["records"]))
-            errors.append(out["parse_errors"])
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("conv_id"),
-                batch.column("turn_idx"),
-                batch.column("tool"),
-                pa.array(texts, pa.string()),
-                pa.array(spans, span_type),
-                pa.array(records, pa.string()),
-                pa.array(errors, pa.int32()),
-            ],
-            names=[
-                "conv_id", "turn_idx", "kind", "extracted_text",
-                "spans", "records", "parse_errors",
-            ],
-        )
+
+
+def _extract_batches_arrow(batches):
+    """The extraction stage's ``mapInArrow`` function: ``_extract_batch``
+    over each batch."""
+    return map(_extract_batch, batches)
 
 
 def extract_transcripts(

@@ -30,6 +30,10 @@ zip from the path when the interpreter's installed PySpark is
 byte-identical in its release and worker-protocol modules, and
 otherwise starts PySpark as before.
 Cluster masters keep Spark's daemon: the zip path exists only here.
+
+``prepare`` is what makes any session able to run this package, whoever
+built it: ``get_spark``, the spark-submit jobs and the driver contract
+all go through it.
 """
 
 from __future__ import annotations
@@ -51,6 +55,11 @@ def _package_zip() -> str:
     import hashlib
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    if not os.path.isdir(pkg_dir):
+        raise NotADirectoryError(
+            f"{pkg_dir}: the package was imported from an archive, which "
+            "its launcher ships to the workers"
+        )
     entries: list[tuple[str, str]] = []
     h = hashlib.md5()
     for root, _dirs, files in sorted(os.walk(pkg_dir)):
@@ -131,13 +140,29 @@ def get_spark(
     )
     for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.addPyFile(package_zip)
-    # Warm Spark 4's ICU collation machinery single-threaded:
-    # CollationAwareUTF8String.<clinit> (triggered by the first
-    # lower()/upper()) takes seconds, and when dozens of tasks race the
-    # class-init lock it degrades to minutes. Constant-folding this
-    # expression initializes the class on the driver thread — which in
-    # local mode is the executor JVM too.
+    return prepare(builder.getOrCreate())
+
+
+def prepare(spark: SparkSession) -> SparkSession:
+    """Make ``spark`` able to run this package, once per SparkContext.
+
+    Ships the package zip to the Python workers when the package was
+    imported from its source directory; under ``spark-submit --py-files
+    engine.zip`` it was imported from that archive, which the launcher
+    already ships. Then warms Spark 4's ICU collation machinery
+    single-threaded: ``CollationAwareUTF8String.<clinit>`` (triggered by
+    the first ``lower()``/``upper()``) takes seconds, and when dozens of
+    tasks race the class-init lock it degrades to minutes. Constant-folding
+    this expression initializes the class on the driver thread, which in
+    local mode is the executor JVM too.
+
+    The done state lives on the context object, so a new context after
+    ``stop()`` is prepared again and a prepared one starts no job."""
+    sc = spark.sparkContext
+    if getattr(sc, "_pdf_extractors_prepared", False):
+        return spark
+    if os.path.isdir(os.path.dirname(os.path.abspath(__file__))):
+        sc.addPyFile(_package_zip())
     spark.range(1).selectExpr("lower('ICU-WARMUP') as w").collect()
+    sc._pdf_extractors_prepared = True
     return spark

@@ -2,10 +2,13 @@
 shape): launch ``jobs/extract.py`` through the REAL ``spark-submit``
 binary with ``--py-files engine.zip``, in a scratch cwd so nothing
 imports from the checkout by accident, then re-submit the same output
-and prove the checkpoint layer resumes (all buckets skipped)."""
+and prove the checkpoint layer resumes (all buckets skipped). The job
+imports the package from the shipped archive, so it writes and ships no
+second package zip."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import subprocess
@@ -20,9 +23,10 @@ def _spark_submit() -> str:
     return os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
 
 
-def _run(args: list[str], cwd: str) -> str:
+def _run(args: list[str], cwd: str, tmpdir: str) -> str:
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)  # --py-files must carry the package
+    env["TMPDIR"] = tmpdir
     env["PYSPARK_PYTHON"] = sys.executable
     out = subprocess.run(
         [_spark_submit(), "--master", "local[2]", *args],
@@ -44,6 +48,8 @@ def test_spark_submit_pyfiles_roundtrip_and_resume(tmp_path):
     job = os.path.join(REPO, "jobs", "extract.py")
     inp = str(tmp_path / "transcripts")
     outp = str(tmp_path / "extracted")
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
 
     stdout = _run(
         [
@@ -53,6 +59,7 @@ def test_spark_submit_pyfiles_roundtrip_and_resume(tmp_path):
             "--snapshot-id", "snap-1",
         ],
         cwd=str(tmp_path),
+        tmpdir=str(tmpdir),
     )
     m = json.loads(stdout.strip().splitlines()[-1])
     assert m["processed_buckets"] == [0, 1, 2, 3]
@@ -68,8 +75,10 @@ def test_spark_submit_pyfiles_roundtrip_and_resume(tmp_path):
             "--n-buckets", "4", "--snapshot-id", "snap-1",
         ],
         cwd=str(tmp_path),
+        tmpdir=str(tmpdir),
     )
     m2 = json.loads(stdout2.strip().splitlines()[-1])
     assert m2["processed_buckets"] == []
     assert m2["skipped_buckets"] == [0, 1, 2, 3]
     assert m2["rows"] == m["rows"]
+    assert glob.glob(os.path.join(tmpdir, "pdf_extractors_spark_*.zip")) == []
